@@ -131,8 +131,8 @@ def main() -> None:
     # evict the per-session memo checkpoints between tiers so a headline
     # key's retained blocks can't tax the wide tier (VERDICT r13 item 6;
     # measured ~1.8x bleed onto sim_ivf_balance in a shared session).
-    # Since r15 this evicts the FULL aux-cache registry (graph/vector/text
-    # memos too, VERDICT r14 item 2), so the wide tier starts memo-cold.
+    # This evicts every operator memo (fits2db_spark/memo.py), so the wide
+    # tier starts memo-cold.
     from fits2db_spark.session import free_memo_checkpoints
 
     free_memo_checkpoints()

@@ -1066,7 +1066,7 @@ def spatial_htm(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (id + 3 vertices + point), so each cut materializes a few
     hundred KB. Interim blocks are freed once the (2-column) result
     materializes — the established shared-subtree discipline."""
-    from .advanced import _free_local_checkpoint
+    from ..memo import free_local_checkpoint
 
     c = load(spark, sf_dir, "customer")
     base = c.selectExpr(
@@ -1097,7 +1097,7 @@ def spatial_htm(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     for it in interims:
-        _free_local_checkpoint(it)
+        free_local_checkpoint(it)
     return result
 
 

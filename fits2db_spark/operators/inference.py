@@ -4338,9 +4338,9 @@ def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("logloss", 6).alias("logloss"),
         F.round("cell_accuracy", 6).alias("cell_majority_accuracy"),
     ).localCheckpoint(eager=True)  # 1 row; lets the cells blocks free now
-    from .advanced import _free_local_checkpoint
+    from ..memo import free_local_checkpoint
 
-    _free_local_checkpoint(cells)
+    free_local_checkpoint(cells)
     return out
 
 
@@ -6667,10 +6667,10 @@ def ml_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("logloss_after"),
     )
-    from .advanced import _free_local_checkpoint
+    from ..memo import free_local_checkpoint
 
     result = out.localCheckpoint(eager=True)
-    _free_local_checkpoint(hist)
+    free_local_checkpoint(hist)
     return result
 
 
@@ -7239,10 +7239,10 @@ def ml_cox_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(round(z, 6)).alias("z_stat"),
         F.lit(1 if abs(z) > 1.96 else 0).cast("int").alias("reject_05"),
     )
-    from .advanced import _free_local_checkpoint
+    from ..memo import free_local_checkpoint
 
     result = out.localCheckpoint(eager=True)
-    _free_local_checkpoint(ev_t)
+    free_local_checkpoint(ev_t)
     return result
 
 
@@ -7422,10 +7422,10 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # 1 row; lets the interim blocks go
     )
-    from .advanced import _free_local_checkpoint
+    from ..memo import free_local_checkpoint
 
     for interim in (d, fit0, calh):
-        _free_local_checkpoint(interim)
+        free_local_checkpoint(interim)
     return result
 
 
@@ -7591,15 +7591,15 @@ def ml_gradient_boost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.lit(float(best["mu_right"])))
             ).alias("r"),
         ).localCheckpoint(eager=True)
-        from .advanced import _free_local_checkpoint
+        from ..memo import free_local_checkpoint
 
         if cur is not hist:
-            _free_local_checkpoint(cur)
+            free_local_checkpoint(cur)
         cur = nxt
-    from .advanced import _free_local_checkpoint
+    from ..memo import free_local_checkpoint
 
-    _free_local_checkpoint(hist)
-    _free_local_checkpoint(cur)
+    free_local_checkpoint(hist)
+    free_local_checkpoint(cur)
     return spark.createDataFrame(
         rows, "round int, split_bucket long, gain double, mu_left double, mu_right double"
     )

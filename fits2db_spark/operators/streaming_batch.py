@@ -12,9 +12,12 @@ same plan is incremental with state-store-backed session merge.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..registry import register
 from ..tables import load
 
@@ -197,57 +200,51 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the SAME SQL as the batch stream_tumbling.
 # ---------------------------------------------------------------------------
 
-_LIVE_DONE: dict[tuple[str, str, str], str] = {}
-
-
-def _live_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple[str, str, str]:
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:
-        app_id = ""
-    return (app_id, sf_dir, tag)
-
-
 def _drain_live(
     spark: SparkSession,
-    key: tuple,
+    sf_dir: str,
     prefix: str,
-    stream_df: DataFrame,
+    stream: Callable[[], DataFrame],
     output_mode: str,
-    state_partitions: int | None = None,
+    sharded: bool = False,
 ) -> DataFrame:
-    """Drain a live stream to a memory sink (availableNow), memoize the sink
-    table per (session, sf_dir, tag), and return it. Raises rather than
-    memoizing if the drain does not terminate — a partial sink table must
-    never be returned. The ONE drain contract for every stream_live_* query.
+    """Drain the live stream ``stream()`` builds to a memory sink
+    (availableNow) and return the sink table, memoized as ``prefix``.
+    Raises rather than memoizing if the drain does not terminate — a
+    partial sink table must never be returned. The ONE drain contract for
+    every stream_live_* query.
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    query's FIRST batch only (streaming state sharding is fixed at query
-    start from that conf; each drain uses a fresh temp checkpoint, so the
-    pin never conflicts with prior state). Every state-store shard pays a
-    per-commit maintenance round trip per micro-batch — at fixture scale
-    fewer shards is strictly faster, and on a real cluster the knob is
-    sized to state volume, exactly as the module docstring prescribes."""
+    ``sharded`` pins ``spark.sql.shuffle.partitions`` to
+    ``_state_shards`` for the query's FIRST batch only (streaming state
+    sharding is fixed at query start from that conf; each drain uses a
+    fresh temp checkpoint, so the pin never conflicts with prior state).
+    Every state-store shard pays a per-commit maintenance round trip per
+    micro-batch — at fixture scale fewer shards is strictly faster, and on
+    a real cluster the knob is sized to state volume, exactly as the
+    module docstring prescribes."""
     from ..streaming.live import run_stream_to_memory
 
-    name = f"{prefix}_{abs(hash(key)) % 10**8}"
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = run_stream_to_memory(stream_df, name, output_mode=output_mode)
-        terminated = q.awaitTermination(300)
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-    if not terminated:
-        q.stop()
-        raise RuntimeError(
-            f"{prefix}: availableNow drain did not terminate in 300s — a "
-            "partial sink table must never be returned (or memoized)"
-        )
-    _LIVE_DONE[key] = name
-    return spark.table(name)
+    def build() -> memo.SinkView:
+        name = f"{prefix}_{memo.digest(sf_dir)}"
+        stream_df = stream()
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        if sharded:
+            spark.conf.set("spark.sql.shuffle.partitions", str(_state_shards(spark, sf_dir)))
+        try:
+            q = run_stream_to_memory(stream_df, name, output_mode=output_mode)
+            terminated = q.awaitTermination(300)
+        finally:
+            if sharded:
+                spark.conf.set("spark.sql.shuffle.partitions", before)
+        if not terminated:
+            q.stop()
+            raise RuntimeError(
+                f"{prefix}: availableNow drain did not terminate in 300s — a "
+                "partial sink table must never be returned (or memoized)"
+            )
+        return memo.SinkView(name)
+
+    return spark.table(memo.memo(spark, sf_dir, prefix, build))
 
 
 # ~rows of staged source per state-store shard. Each shard pays a fixed
@@ -283,8 +280,8 @@ def _state_shards(spark: SparkSession, sf_dir: str) -> int:
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table as 3 time-ordered parquet files (one per
-    future micro-batch). Memoized per (session, sf_dir) via _scratch_dir,
-    so every live-streaming query shares one staging pass."""
+    future micro-batch). Memoized via _scratch_dir, so every
+    live-streaming query shares one staging pass."""
     import os
 
     from .scans import _scratch_dir
@@ -334,7 +331,7 @@ def stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ``readStream`` (maxFilesPerTrigger=1 -> 3 micro-batches), windowed
     exactly like the batch ``stream_tumbling``, and drained to a memory
     sink under ``trigger(availableNow=True)``. The stream runs once per
-    (session, sf_dir); repeat calls return the materialized sink table.
+    session and data version (a memo); repeat calls return the sink table.
 
     Scale: the identical plan runs unbounded on a real file/Kafka source —
     state lives in the state store keyed by (window, event_type); here the
@@ -342,16 +339,12 @@ def stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a production job uses append mode + watermark eviction)."""
     from ..streaming.live import events_stream, tumbling_counts
 
-    key = _live_key(spark, sf_dir, "tumbling")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
     return _drain_live(
         spark,
-        key,
+        sf_dir,
         "live_tumbling",
-        tumbling_counts(
-            events_stream(spark, staging, max_files_per_trigger=1),
+        lambda: tumbling_counts(
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1),
             watermark="100 days",
         ),
         "complete",
@@ -392,20 +385,15 @@ def stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_live.py::test_stream_dedup_drops_duplicates."""
     from ..streaming.live import events_stream
 
-    key = _live_key(spark, sf_dir, "dedup")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = (
-        events_stream(spark, staging, max_files_per_trigger=None)
-        .withWatermark("ts", "100 days")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    return _drain_live(
-        spark, key, "live_dedup", stream, "append",
-        state_partitions=_state_shards(spark, sf_dir),
-    )
+    def stream() -> DataFrame:
+        return (
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=None)
+            .withWatermark("ts", "100 days")
+            .dropDuplicates(["user_id", "event_type"])
+            .select("user_id", "event_type")
+        )
+
+    return _drain_live(spark, sf_dir, "live_dedup", stream, "append", sharded=True)
 
 
 @register(
@@ -445,18 +433,16 @@ def stream_live_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays pinned in tests/test_streaming_live.py."""
     from ..streaming.live import click_purchase_interval_join, events_stream
 
-    key = _live_key(spark, sf_dir, "ivjoin")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    joined = click_purchase_interval_join(
-        events_stream(spark, staging, max_files_per_trigger=None)
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_ts",
-        "buy_ts",
-        F.round("buy_value", 2).alias("buy_value"),
-    )
+    def joined() -> DataFrame:
+        return click_purchase_interval_join(
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=None)
+        ).select(
+            F.col("c_user").alias("user_id"),
+            "click_ts",
+            "buy_ts",
+            F.round("buy_value", 2).alias("buy_value"),
+        )
+
     # 2 state stores (one per join side) x shards x per-batch commit cost.
     # r12 floor probe (BASELINE.md): warm single-batch drain is 2.0-2.4s at
     # 4 shards vs 1.85-1.9s at 1 shard at sf0.1, but the r15 sf1 sweep
@@ -465,10 +451,7 @@ def stream_live_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events footer row count (1 at sf0.1, 4 at sf1, machine width cap).
     # The residue is availableNow machinery: a 1-row staging through the
     # identical plan still costs 2.8s cold / ~1.9s warm.
-    return _drain_live(
-        spark, key, "live_ivjoin", joined, "append",
-        state_partitions=_state_shards(spark, sf_dir),
-    )
+    return _drain_live(spark, sf_dir, "live_ivjoin", joined, "append", sharded=True)
 
 
 @register(
@@ -505,20 +488,15 @@ def stream_live_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_live.py::test_stateful_running_counters."""
     from ..streaming.live import events_stream, running_user_counters
 
-    key = _live_key(spark, sf_dir, "counters")
-    if key in _LIVE_DONE:
-        drained = spark.table(_LIVE_DONE[key])
-    else:
-        staging = _staged_events_dir(spark, sf_dir)
-        drained = _drain_live(
-            spark,
-            key,
-            "live_counters",
-            running_user_counters(
-                events_stream(spark, staging, max_files_per_trigger=None)
-            ),
-            "update",
-        )
+    drained = _drain_live(
+        spark,
+        sf_dir,
+        "live_counters",
+        lambda: running_user_counters(
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=None)
+        ),
+        "update",
+    )
     return (
         drained.groupBy("user_id")
         .agg(
@@ -569,34 +547,27 @@ def stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     session per user, sharded by the grouping key and evicted by the
     watermark as event time advances; a production job runs append mode
     with a real watermark and emits each session once, on close."""
-    key = _live_key(spark, sf_dir, "session")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
     from ..streaming.live import events_stream
 
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = (
-        events_stream(spark, staging, max_files_per_trigger=1)
-        .withWatermark("ts", "100 days")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
+    def stream() -> DataFrame:
+        return (
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1)
+            .withWatermark("ts", "100 days")
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    return _drain_live(spark, key, "live_session", stream, "complete")
 
-
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("stream_windowed_topk")
+    return _drain_live(spark, sf_dir, "live_session", stream, "complete")
 
 
 @register(
@@ -622,19 +593,17 @@ def stream_live_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.live import events_stream
 
-    key = _live_key(spark, sf_dir, "enrich")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = events_stream(spark, staging, max_files_per_trigger=1)
-    enriched = stream.join(F.broadcast(ev_dim), "user_id").select(
-        "event_id",
-        "user_id",
-        "c_mktsegment",
-        "event_type",
-        F.round("value", 4).alias("value"),
-    )
-    return _drain_live(spark, key, "live_enrich", enriched, "append")
+    def enriched() -> DataFrame:
+        stream = events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1)
+        return stream.join(F.broadcast(ev_dim), "user_id").select(
+            "event_id",
+            "user_id",
+            "c_mktsegment",
+            "event_type",
+            F.round("value", 4).alias("value"),
+        )
+
+    return _drain_live(spark, sf_dir, "live_enrich", enriched, "append")
 
 
 @register(
@@ -667,27 +636,25 @@ def stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming twin."""
     from ..streaming.live import events_stream
 
-    key = _live_key(spark, sf_dir, "sliding")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = events_stream(spark, staging, max_files_per_trigger=1)
-    agg = (
-        stream.withWatermark("ts", "100 days")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
+    def agg() -> DataFrame:
+        return (
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1)
+            .withWatermark("ts", "100 days")
+            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "event_type",
+                "n",
+                "total_value",
+            )
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-    return _drain_live(spark, key, "live_sliding", agg, "complete")
+
+    return _drain_live(spark, sf_dir, "live_sliding", agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -884,7 +851,7 @@ def events_slo_burnrate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _staged_customer_fits_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the customer table as 3 key-ranged FITS BINTABLE files —
     the watched-archive-directory fixture for the live FITS ingest key.
-    Memoized per (session, sf) via _scratch_dir."""
+    Memoized via _scratch_dir."""
     import os
 
     import duckdb
@@ -955,21 +922,18 @@ def stream_live_fits_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     `fits_datasource_v2`); the streaming value here is the offset
     bookkeeping and sink integration, not decode bandwidth."""
     from ..sources.fits_datasource import register as register_fits
-    from ..streaming.live import run_stream_to_memory
 
-    key = _live_key(spark, sf_dir, "fits_ingest")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    register_fits(spark)
-    staging = _staged_customer_fits_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.format("fits")
-        .load(staging)
-        .filter(F.col("c_acctbal") > 5000)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.round(F.col("c_acctbal"), 2).alias("acctbal"),
+    def stream() -> DataFrame:
+        register_fits(spark)
+        return (
+            spark.readStream.format("fits")
+            .load(_staged_customer_fits_dir(spark, sf_dir))
+            .filter(F.col("c_acctbal") > 5000)
+            .select(
+                "c_custkey",
+                "c_name",
+                F.round(F.col("c_acctbal"), 2).alias("acctbal"),
+            )
         )
-    )
-    return _drain_live(spark, key, "live_fits", stream, "append")
+
+    return _drain_live(spark, sf_dir, "live_fits", stream, "append")

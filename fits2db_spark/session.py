@@ -129,35 +129,9 @@ def get_spark(app_name: str = "fits2db_spark", shuffle_partitions: int | None = 
 
 
 def free_memo_checkpoints() -> None:
-    """Evict every per-session operator memo — the cross-match phase-1 /
-    FITS-pushdown ``localCheckpoint`` caches, every persisted-DataFrame
-    dict in the ``tables._AUX_CACHES`` registry (the graph edge/pair
-    memos, IVF train, PQ fit, covariance Gram), and the llm_text
-    shingle/band/component caches — and free their block-manager storage.
+    """Evict every operator memo (``memo.evict``). The fixture cache that
+    ``tables.warm_cache`` builds is not touched; ``tables.clear_cache``
+    resets both."""
+    from . import memo
 
-    The memo caches make repeated invocations of the SAME key cheap, but
-    they hold executor storage for the whole session: VERDICT r13 measured
-    ~1.8x slowdown on an unrelated later key sharing the session with
-    ``join_xmatch_knn``'s retained checkpoint, and before r15 this helper
-    freed LESS than its name promises (VERDICT r14 item 2) — the graph /
-    vector / text memos stayed persisted for the session after bench.py's
-    between-tier eviction calls. Long-lived sessions that re-stage data
-    under an sf_dir should call it to drop stale entries; the fixture
-    cache that ``tables.warm_cache`` builds is deliberately NOT touched
-    (that is the bench's base-table layout, reset via
-    ``tables.clear_cache``)."""
-    from . import tables
-    from .operators.joins import clear_xm_p1_cache
-    from .operators.llm_text import clear_caches as clear_llm_text_caches
-    from .operators.scans import clear_pushdown_ckpt_cache
-
-    clear_xm_p1_cache()
-    clear_pushdown_ckpt_cache()
-    clear_llm_text_caches()
-    for aux in tables._AUX_CACHES:
-        for df in aux.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        aux.clear()
+    memo.evict()

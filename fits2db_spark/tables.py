@@ -161,31 +161,17 @@ def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) 
         _CACHE[(sf_dir, name)] = df
 
 
-# Operator modules with their own persisted-DataFrame memo dicts register
-# them here so clear_cache() is the ONE reset path (r5 review: the
-# graph_triangles edge memo leaked past clear_cache).
-_AUX_CACHES: list[dict] = []
-
-
-def register_aux_cache(cache: dict) -> dict:
-    _AUX_CACHES.append(cache)
-    return cache
-
-
 def clear_cache() -> None:
+    """Unpersist the ``warm_cache`` fixture tables and evict every memo."""
+    from . import memo
+
     for df in _CACHE.values():
         try:
             df.unpersist()
         except Exception:
             pass
     _CACHE.clear()
-    for aux in _AUX_CACHES:
-        for df in aux.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        aux.clear()
+    memo.evict()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str, _use_cache: bool = True) -> DataFrame:
@@ -214,12 +200,6 @@ def load(spark: SparkSession, sf_dir: str, name: str, _use_cache: bool = True) -
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (SQL entry point)."""
-    for n, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(n)
 
 
 def daily_value_series(spark: SparkSession, sf_dir: str, agg: str = "sum") -> DataFrame:

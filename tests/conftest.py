@@ -18,3 +18,12 @@ def spark():
     s = get_spark("fits2db_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def memo_counts(prefix: str, sf_dir: str) -> tuple[int, int]:
+    """(hits, misses) summed over the memo entries of ``sf_dir`` whose name
+    starts with ``prefix``."""
+    from fits2db_spark import memo
+
+    rows = [v for (_, d, n), v in memo.stats().items() if d == sf_dir and n.startswith(prefix)]
+    return sum(v["hits"] for v in rows), sum(v["misses"] for v in rows)

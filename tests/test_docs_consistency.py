@@ -58,6 +58,14 @@ def test_priority_window_names_are_all_registered():
     assert not dupes, f"duplicate priority entries: {dupes}"
 
 
+def test_query_order_is_the_priority_list():
+    # queries() is consumed in all_queries() order; every registered key is
+    # listed in _PRIORITY_QUERIES, so that list IS the order
+    from fits2db_spark import registry
+
+    assert list(all_queries()) == list(registry._PRIORITY_QUERIES)
+
+
 def test_survey_section2_names_every_registered_key():
     """SURVEY.md §2 is the judge's normative inventory; r6 found 8 keys
     registered but absent from it. Forward-direction pin: every registered

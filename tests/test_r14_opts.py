@@ -3,7 +3,8 @@ ladder and the k-core convergence early-exit must not change what any query
 computes (the oracle pins end-to-end equality; these pin the specific
 invariants the optimizations rely on)."""
 
-from tests.conftest import SF_SMOKE
+from fits2db_spark import memo
+from tests.conftest import SF_SMOKE, memo_counts
 
 
 def _rows(df, *cols):
@@ -17,11 +18,14 @@ def test_xm_singlepass_at_fixture_scale(spark):
     from fits2db_spark.operators import joins as J
 
     assert J._catalog_rows(SF_SMOKE) < J._XM_LADDER_MIN_ROWS
-    J.clear_xm_p1_cache()
+    memo.evict()
+    before = memo_counts("xm-p1:", SF_SMOKE)
     J.join_xmatch_knn(spark, SF_SMOKE).write.format("noop").mode(
         "overwrite"
     ).save()
-    assert J._XM_P1_CACHE == {}, "single-pass path must not build rung memos"
+    assert memo_counts("xm-p1:", SF_SMOKE) == before, (
+        "single-pass path must not build rung memos"
+    )
 
 
 def test_xm_ladder_and_singlepass_agree(spark, monkeypatch):
@@ -29,16 +33,16 @@ def test_xm_ladder_and_singlepass_agree(spark, monkeypatch):
     scale must return row-identical results to the single pass."""
     from fits2db_spark.operators import joins as J
 
-    J.clear_xm_p1_cache()
+    memo.evict()
     single = _rows(
         J.join_xmatch_knn(spark, SF_SMOKE), "b_id", "a_id", "rk", "sep_arcsec_floor"
     )
     monkeypatch.setattr(J, "_XM_LADDER_MIN_ROWS", 0)
-    J.clear_xm_p1_cache()
+    memo.evict()
     laddered = _rows(
         J.join_xmatch_knn(spark, SF_SMOKE), "b_id", "a_id", "rk", "sep_arcsec_floor"
     )
-    J.clear_xm_p1_cache()
+    memo.evict()
     assert single == laddered
     assert len(single) > 0
 
@@ -57,13 +61,13 @@ def test_kcore_unroll_invariance(spark, monkeypatch):
     from fits2db_spark.operators import advanced as A
 
     def run():
-        A.clear_graph_memos()
+        memo.evict()
         return _rows(A.graph_kcore(spark, SF_SMOKE), "node", "core_degree")
 
     base = run()
     monkeypatch.setattr(A, "_KCORE_ROUNDS", A._KCORE_ROUNDS + 3)
     more = run()
-    A.clear_graph_memos()
+    memo.evict()
     assert base == more
 
 
@@ -432,7 +436,7 @@ def test_spatial_htm_chain_is_split_and_freed(spark, monkeypatch):
 
     freed = []
     monkeypatch.setattr(
-        A, "_free_local_checkpoint", lambda df: freed.append(df)
+        memo, "free_local_checkpoint", lambda df: freed.append(df)
     )
     out = E.spatial_htm(spark, SF_SMOKE)
     assert len(freed) == 2, "chain must checkpoint (and free) 2 interim spans"
@@ -507,7 +511,7 @@ def test_ps_pairs_memo_shared_and_equivalent(spark):
     from fits2db_spark import tables
     from fits2db_spark.operators import advanced as A
 
-    A.clear_graph_memos()
+    memo.evict()
     base = A._ps_pairs(spark, SF_SMOKE)
     assert A._ps_pairs(spark, SF_SMOKE) is base, "memo must return one frame"
     sym = A._lpa_sym_edges(spark, SF_SMOKE)
@@ -532,7 +536,9 @@ def test_ps_pairs_memo_shared_and_equivalent(spark):
 
     # clear_cache stays the ONE reset path for the shared graph base
     tables.clear_cache()
-    assert A._TRI_EDGE_CACHE == {}
+    misses = memo_counts("ps_pairs", SF_SMOKE)[1]
+    assert A._ps_pairs(spark, SF_SMOKE) is not base
+    assert memo_counts("ps_pairs", SF_SMOKE)[1] == misses + 1
 
 
 def test_co_supply_counts_memo_shared_by_threshold_builds(spark):
@@ -541,13 +547,14 @@ def test_co_supply_counts_memo_shared_by_threshold_builds(spark):
     thresholded edge-list builds must read the same persisted frame."""
     from fits2db_spark.operators import advanced as A
 
-    A.clear_graph_memos()
+    memo.evict()
+    misses = memo_counts("cosupply", SF_SMOKE)[1]
     sh = A._co_supply_counts(spark, SF_SMOKE)
     assert A._co_supply_counts(spark, SF_SMOKE) is sh, "memo must return one frame"
     A.graph_triangles(spark, SF_SMOKE).collect()
-    cosupply = [k for k in A._TRI_EDGE_CACHE if k and k[0] == "cosupply"]
-    assert len(cosupply) == 1
-    assert A._TRI_EDGE_CACHE[cosupply[0]] is sh
+    assert memo_counts("cosupply", SF_SMOKE)[1] == misses + 1
+    assert A._co_supply_counts(spark, SF_SMOKE) is sh
     A.graph_kcore(spark, SF_SMOKE).collect()
-    assert A._TRI_EDGE_CACHE[cosupply[0]] is sh, "kcore build must reuse it"
-    A.clear_graph_memos()
+    assert A._co_supply_counts(spark, SF_SMOKE) is sh, "kcore build must reuse it"
+    assert memo_counts("cosupply", SF_SMOKE)[1] == misses + 1
+    memo.evict()

@@ -10,7 +10,7 @@
 
 import math
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, memo_counts
 
 
 def test_spark_round_passes_non_finite_through():
@@ -39,13 +39,15 @@ def test_spark_round_matches_spark_on_halfway_reprs(spark):
 
 
 def test_fits_datasource_pushdown_checkpoint_is_memoized(spark):
+    from fits2db_spark import memo
     from fits2db_spark.operators import scans
 
-    scans._PUSHDOWN_CKPT_CACHE.clear()
+    memo.evict()
+    hits, misses = memo_counts("fits-pushdown", SF_SMOKE)
     a = scans.fits_datasource_pushdown(spark, SF_SMOKE)
     b = scans.fits_datasource_pushdown(spark, SF_SMOKE)
     assert a is b, "repeated invocations must reuse the cached checkpoint"
-    assert len(scans._PUSHDOWN_CKPT_CACHE) == 1
+    assert memo_counts("fits-pushdown", SF_SMOKE) == (hits + 1, misses + 1)
     assert a.count() == b.count()
 
 

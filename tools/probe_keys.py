@@ -1,7 +1,8 @@
 """Robust per-key timing probe: round-robin N laps over the listed keys in
-one bench-protocol session (warm_cache, memo eviction between laps), report
-per-key min/median — the measurement loop for optimization work on a box
-with hypervisor CPU steal (single best-of-1 readings spike 3-10x).
+one bench-protocol session (warm_cache; --cold evicts every memo before
+each key run), report per-key min/median — the measurement loop for
+optimization work on a box with hypervisor CPU steal (single best-of-1
+readings spike 3-10x).
 
 Usage: python tools/probe_keys.py [--laps N] [--sf DIR] key [key ...]
 """
@@ -26,14 +27,15 @@ def main() -> None:
     ap.add_argument(
         "--cold",
         action="store_true",
-        help="clear per-session operator memo caches (_AUX_CACHES) before "
-        "each lap so every lap pays the bench-cold construction cost",
+        help="evict every operator memo (memo.evict) before each key run "
+        "so every lap pays the bench-cold construction cost",
     )
     ap.add_argument("keys", nargs="+")
     args = ap.parse_args()
 
+    from fits2db_spark import memo
     from fits2db_spark.registry import all_queries
-    from fits2db_spark.session import free_memo_checkpoints, get_spark
+    from fits2db_spark.session import get_spark
     from fits2db_spark.tables import warm_cache
 
     spark = get_spark("fits2db_spark_probe", shuffle_partitions=8)
@@ -44,26 +46,15 @@ def main() -> None:
     times: dict[str, list[float]] = {k: [] for k in args.keys}
     for lap in range(args.laps):
         for name in args.keys:
-            # r15: free_memo_checkpoints() now evicts the FULL aux-cache
-            # registry (graph/vector/text memos), which would make every
-            # probe lap bench-cold; keep the historical warm-probe
-            # semantics (only the checkpoint caches evicted per key) so
-            # r14/r15 probe numbers stay comparable, and reserve the full
-            # eviction for --cold.
-            from fits2db_spark.operators.joins import clear_xm_p1_cache
-            from fits2db_spark.operators.scans import clear_pushdown_ckpt_cache
-
-            clear_xm_p1_cache()
-            clear_pushdown_ckpt_cache()
             if args.cold:
-                free_memo_checkpoints()
+                memo.evict()
             spark.sparkContext.setJobDescription(f"probe[{lap}]: {name}")
             t0 = time.time()
             qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             times[name].append(round(dt, 3))
             print(f"lap {lap} {name:28s} {dt:7.3f}s", flush=True)
-    free_memo_checkpoints()
+    memo.evict()
     out = {
         k: {"runs": v, "min": min(v), "median": statistics.median(v)}
         for k, v in times.items()
